@@ -4,10 +4,10 @@ extract → transform → load contract and ``get_summary()`` surface, over
 lazy Spark DataFrames instead of eager pandas.
 
 Key inversion vs the reference (SURVEY.md §3.4): ``transform()`` here is
-FREE — it only composes logical plans. Work happens at ``load()`` (the
-write actions) and ``get_summary()`` (counts). The reference's four
-independent summary builders (etl.py:251-254) run serially in pandas;
-here they are independent Spark jobs sharing the cached cleaned relation.
+FREE — it only composes logical plans, each carrying an ``Observation``
+row count. Work happens at ``load()``: each output table is computed
+once, pinned while all of its sinks write it, and its first write fills
+its row count, so ``get_summary()`` after ``load()`` runs no Spark job.
 """
 
 from __future__ import annotations
@@ -17,17 +17,16 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..plans import parity
+from ..plans import llmdata, parity
 from ..sources.readers import load_star
 from ..sources.writers import save_tables
 
 #: Per-stage progress logging — the reference's only observability is
 #: logger.info record counts at each stage (reference etl.py:52,63,85,104).
-#: Stage *transitions* are always logged (free); record *counts* are
-#: opt-in via ``AnalyticsPipeline(log_counts=True)`` because every count
-#: is a Spark job — always-on counts double the work at 100 TB.
+#: Stage transitions are logged as they happen; the output tables' record
+#: counts are logged by load() from the counts its writes observed.
 logger = logging.getLogger(__name__)
 
 
@@ -39,19 +38,13 @@ class AnalyticsPipeline:
     carte, state carried between stages, fail-fast preconditions.
     """
 
-    def __init__(self, spark: SparkSession, source_dir: str, output_dir: str,
-                 log_counts: bool = False, observe_counts: bool = False):
+    def __init__(self, spark: SparkSession, source_dir: str, output_dir: str):
         self.spark = spark
         self.source_dir = source_dir
         self.output_dir = output_dir
-        self.log_counts = log_counts
-        #: zero-cost alternative to log_counts: attach an ``Observation``
-        #: to each output plan so row counts ride the load() write action
-        #: itself — no second pass over the data, unlike count() jobs.
-        self.observe_counts = observe_counts
         self.raw_tables: dict[str, DataFrame] | None = None
         self.transformed_data: dict[str, DataFrame] | None = None
-        self._observations: dict = {}
+        self._observations: dict[str, Observation] = {}
         self._loaded = False
 
     def extract(self) -> dict[str, DataFrame]:
@@ -59,11 +52,6 @@ class AnalyticsPipeline:
         self.raw_tables = load_star(self.spark, self.source_dir)
         logger.info("extract: registered %d source tables (lazy scans)",
                     len(self.raw_tables))
-        if self.log_counts:
-            # the reference logs "Extracted N records" (etl.py:52) — one
-            # count job per source table when opted in
-            for name, df in self.raw_tables.items():
-                logger.info("extract: %s = %d records", name, df.count())
         return self.raw_tables
 
     def transform(self) -> dict[str, DataFrame]:
@@ -71,36 +59,24 @@ class AnalyticsPipeline:
         only — no jobs run until load()/get_summary()."""
         if self.raw_tables is None:
             raise RuntimeError("No data to transform. Run extract() first.")
-        cleaned = parity.clean_transactions(self.spark, self.source_dir)
-        self.transformed_data = {
+        tables = {
             "customer_summary": parity.customer_summary(self.spark, self.source_dir),
             "product_summary": parity.product_summary(self.spark, self.source_dir),
             "daily_sales": parity.daily_sales_moving_avg(self.spark, self.source_dir),
             "country_summary": parity.country_summary(self.spark, self.source_dir),
-            "transactions": cleaned,
+            "transactions": parity.clean_transactions(self.spark, self.source_dir),
         }
-        if self.observe_counts:
-            # The reference pays a full extra pass for every logged count
-            # (pandas len() is free; Spark count() is a job — SURVEY
-            # §3.4). df.observe() instead accumulates metrics DURING the
-            # next action over the plan: load() writes the table and the
-            # row count falls out of the same job. observed_counts()
-            # reads them afterwards.
-            from pyspark.sql import Observation, functions as F
-
-            observed = {}
-            for name, df in self.transformed_data.items():
-                obs = Observation(f"rows_{name}")
-                observed[name] = df.observe(obs, F.count(F.lit(1)).alias("n"))
-                self._observations[name] = obs
-            self.transformed_data = observed
+        # A Spark count() is a full job (pandas len() is free — SURVEY
+        # §3.4); an Observation instead counts rows during the first
+        # action over the plan, i.e. load()'s first write of the table.
+        self._observations = {name: Observation(f"rows_{name}") for name in tables}
+        self._loaded = False
+        self.transformed_data = {
+            name: df.observe(self._observations[name], F.count(F.lit(1)).alias("n"))
+            for name, df in tables.items()
+        }
         logger.info("transform: composed %d output plans (no jobs yet)",
                     len(self.transformed_data))
-        if self.log_counts:
-            # "Cleaned data: N records" / per-summary counts
-            # (etl.py:63,85,104) — a count job per table when opted in
-            for name, df in self.transformed_data.items():
-                logger.info("transform: %s = %d records", name, df.count())
         return self.transformed_data
 
     #: referential integrity must hold before anything publishes; the
@@ -172,19 +148,18 @@ class AnalyticsPipeline:
                 overwrites=dict(self.transformed_data),
                 writer="analytics_pipeline",
             )
-            self._loaded = True
             logger.info(
                 "load: catalog txn %d → %d tables",
                 seq,
                 len(self.transformed_data),
             )
-            return {
+            written = {
                 "catalog": [
                     f"{name}@v{v}" for name, v in cat.snapshot(seq).items()
                 ],
                 "txn_seq": seq,
             }
-        if versioned:
+        elif versioned:
             from ..sources.table import VersionedTable
 
             published = []
@@ -196,13 +171,15 @@ class AnalyticsPipeline:
                     df, operation="publish", writer="analytics_pipeline"
                 )
                 published.append(f"{name}@v{v}")
-            self._loaded = True
             logger.info("load: versioned → %d tables", len(published))
-            return {"versioned": published}
-        written = save_tables(self.transformed_data, self.output_dir, formats)
+            written = {"versioned": published}
+        else:
+            written = save_tables(self.transformed_data, self.output_dir, formats)
+            for fmt, paths in written.items():
+                logger.info("load: %s → %d tables", fmt, len(paths))
         self._loaded = True
-        for fmt, paths in written.items():
-            logger.info("load: %s → %d tables", fmt, len(paths))
+        for name, n in self.get_summary().items():
+            logger.info("load: %s = %d records", name, n)
         return written
 
     def run(
@@ -211,13 +188,18 @@ class AnalyticsPipeline:
         validate_first: bool = False,
     ) -> dict:
         """Full E-T-L (reference etl.py:390-413), wall-clock timed; with
-        ``validate_first`` the DQ gate runs before any transform job."""
+        ``validate_first`` the DQ gate runs before any transform job. The
+        relations the output plans pinned (``llmdata._pin``) are released
+        once the outputs are written."""
         start = time.time()
         self.extract()
         if validate_first:
             self.validate()
-        self.transform()
-        written = self.load(output_formats)
+        try:
+            self.transform()
+            written = self.load(output_formats)
+        finally:
+            llmdata.release_plan_caches()
         return {
             "elapsed_seconds": round(time.time() - start, 2),
             "written": written,
@@ -225,29 +207,15 @@ class AnalyticsPipeline:
         }
 
     def get_summary(self) -> dict:
-        """Row counts per output table (reference etl.py:415-422). Counts
-        are jobs; summaries are aggregate-grain so each is cheap. With
-        ``observe_counts`` and a completed load(), prefers the observed
-        metrics — zero extra jobs."""
+        """Row counts per output table (reference etl.py:415-422). After
+        load() these are the counts its writes observed — no Spark job.
+        Before load() each table is counted with a job, because
+        ``Observation.get`` blocks until its plan has run."""
         if self.transformed_data is None:
             return {"status": "No data transformed yet"}
-        observed = self.observed_counts()
-        return {
-            name: observed[name] if name in observed else df.count()
-            for name, df in self.transformed_data.items()
-        }
-
-    def observed_counts(self) -> dict:
-        """Row counts captured by the Observations during the last action
-        over each plan (empty until an action — e.g. load() — ran).
-        ``Observation.get`` blocks until its plan executed once, so
-        nothing is read before load() has run."""
-        if not self._observations or not self._loaded:
-            return {}
-        return {
-            name: obs.get["n"]
-            for name, obs in self._observations.items()
-        }
+        if self._loaded:
+            return {name: obs.get["n"] for name, obs in self._observations.items()}
+        return {name: df.count() for name, df in self.transformed_data.items()}
 
 
 class TrainingDataPipeline:
@@ -597,16 +565,17 @@ class TrainingDataPipeline:
         return self._corpus_canon.join(self._dropped, "doc_id", "left_anti")
 
     def run(self) -> dict:
-        import time
-
-        from pyspark.sql import functions as F
-
+        """Write the curated corpus partitioned by source, then release the
+        relations its plan pinned (``llmdata._pin``); the returned stats
+        are read back from the written files."""
         start = time.time()
-        curated = self.curated()
         out_path = f"{self.output_dir}/curated_documents"
-        curated.withColumn("part_source", F.col("source")).write.mode(
-            "overwrite"
-        ).partitionBy("part_source").parquet(out_path)
+        try:
+            self.curated().withColumn("part_source", F.col("source")).write.mode(
+                "overwrite"
+            ).partitionBy("part_source").parquet(out_path)
+        finally:
+            llmdata.release_plan_caches()
         written = self.spark.read.parquet(out_path)
         stats = (
             written.groupBy("source")

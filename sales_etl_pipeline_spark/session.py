@@ -23,7 +23,9 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"
 
 
 def default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """``local[<usable cores>]``; ``SPARK_GRAFT_CPUS`` overrides the core
+    count and ``SPARK_GRAFT_MASTER`` the whole master URL."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
 
 

@@ -307,9 +307,10 @@ def write_bucketed(
 
 
 def write_sqlite(df: DataFrame, db_path: str, table: str) -> None:
-    """K3 (etl.py:292-303). Summary tables are driver-collectable by design
-    (§4.3 invariant: sinks of this kind only receive aggregated relations);
-    we go through Arrow→pandas→sqlite3 which are all in-container."""
+    """K3 (etl.py:292-303): collects the WHOLE relation to the driver
+    (Arrow→pandas) and writes it through sqlite3, all in-container.
+    ``save_tables`` sends it every output table, the ``transactions``
+    fact table included, so driver memory bounds what this sink takes."""
     os.makedirs(os.path.dirname(db_path) or ".", exist_ok=True)
     import sqlite3
 
@@ -334,37 +335,41 @@ def write_jdbc(df: DataFrame, url: str, table: str, properties: dict | None = No
     writer.save()
 
 
+#: file sinks ``save_tables`` writes as ``<output_dir>/<table>.<format>``
+_FILE_SINKS = {"csv": write_csv, "parquet": write_parquet, "json": write_json, "orc": write_orc}
+
+
 def save_tables(tables: dict[str, DataFrame], output_dir: str, formats: list[str] | None = None) -> dict[str, list[str]]:
     """K6 dispatcher (etl.py:364-386): fan a dict-catalog out to sinks.
 
     Default formats mirror the reference's ``['csv','parquet','sqlite']``.
+    Every format is checked before the first write. Each table is computed
+    once: with more than one format it is persisted while its sinks write
+    it, then unpersisted, so at most one table is pinned at a time.
     Returns {format: [written paths/tables]}.
     """
     formats = formats or ["csv", "parquet", "sqlite"]
+    unknown = [fmt for fmt in formats if fmt != "sqlite" and fmt not in _FILE_SINKS]
+    if unknown:
+        raise ValueError(f"Unknown sink format(s): {unknown} (jdbc sinks go through write_jdbc)")
     os.makedirs(output_dir, exist_ok=True)
-    written: dict[str, list[str]] = {}
-    for fmt in formats:
-        paths: list[str] = []
-        for name, df in tables.items():
-            if fmt == "csv":
-                path = os.path.join(output_dir, f"{name}.csv")
-                write_csv(df, path)
-            elif fmt == "parquet":
-                path = os.path.join(output_dir, f"{name}.parquet")
-                write_parquet(df, path)
-            elif fmt == "sqlite":
-                path = os.path.join(output_dir, "sales_data.db")
-                write_sqlite(df, path, name)
-            elif fmt == "json":
-                path = os.path.join(output_dir, f"{name}.json")
-                write_json(df, path)
-            elif fmt == "orc":
-                path = os.path.join(output_dir, f"{name}.orc")
-                write_orc(df, path)
-            else:
-                raise ValueError(f"Unknown sink format: {fmt!r} (jdbc sinks go through write_jdbc)")
-            paths.append(path)
-        written[fmt] = paths
+    written: dict[str, list[str]] = {fmt: [] for fmt in formats}
+    pin = len(formats) > 1
+    for name, df in tables.items():
+        if pin:
+            df.persist()
+        try:
+            for fmt in formats:
+                if fmt == "sqlite":
+                    path = os.path.join(output_dir, "sales_data.db")
+                    write_sqlite(df, path, name)
+                else:
+                    path = os.path.join(output_dir, f"{name}.{fmt}")
+                    _FILE_SINKS[fmt](df, path)
+                written[fmt].append(path)
+        finally:
+            if pin:
+                df.unpersist()
     return written
 
 

@@ -52,28 +52,91 @@ def test_decode_media_stub_raises():
         multimodal.decode_media(b"\x00", "jpeg")
 
 
+PIPELINE_TABLES = (
+    "customer_summary",
+    "product_summary",
+    "daily_sales",
+    "country_summary",
+    "transactions",
+)
+
+
+def _sink_row_counts(out: str) -> dict[str, dict[str, int]]:
+    """{format: {table: rows}} read back from the CSV, Parquet and SQLite
+    sinks without Spark."""
+    import glob
+    import sqlite3
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    counts: dict[str, dict[str, int]] = {"csv": {}, "parquet": {}, "sqlite": {}}
+    with sqlite3.connect(os.path.join(out, "sales_data.db")) as conn:
+        for table in PIPELINE_TABLES:
+            parts = sorted(glob.glob(os.path.join(out, f"{table}.csv", "*.csv")))
+            counts["csv"][table] = sum(len(pd.read_csv(p)) for p in parts)
+            counts["parquet"][table] = pq.read_table(
+                os.path.join(out, f"{table}.parquet")
+            ).num_rows
+            counts["sqlite"][table] = conn.execute(
+                f'SELECT COUNT(*) FROM "{table}"'
+            ).fetchone()[0]
+    return counts
+
+
 def test_pipeline_end_to_end(spark, tmp_path):
     pipe = AnalyticsPipeline(spark, SF, str(tmp_path))
     summary = pipe.run(output_formats=["csv", "parquet", "sqlite"])
-    # all five reference output tables written and non-empty
-    for table in (
-        "customer_summary",
-        "product_summary",
-        "daily_sales",
-        "country_summary",
-        "transactions",
-    ):
+    # all five reference output tables written, non-empty, and holding the
+    # same rows in every sink, each equal to the summary's count
+    sinks = _sink_row_counts(str(tmp_path))
+    for table in PIPELINE_TABLES:
         assert summary[table] > 0
-        assert os.path.exists(os.path.join(str(tmp_path), f"{table}.parquet"))
-    # sqlite sink readable with matching counts
-    import sqlite3
-
-    with sqlite3.connect(os.path.join(str(tmp_path), "sales_data.db")) as conn:
-        n = conn.execute("SELECT COUNT(*) FROM customer_summary").fetchone()[0]
-    assert n == summary["customer_summary"]
+        for fmt in ("csv", "parquet", "sqlite"):
+            assert sinks[fmt][table] == summary[table], (fmt, table)
+    # after load() the counts are the ones the writes observed: reading
+    # them starts no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("get_summary_after_load", "get_summary after load")
+    try:
+        again = pipe.get_summary()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("get_summary_after_load") == []
+    assert again == {t: summary[t] for t in PIPELINE_TABLES}
     # re-loadable parquet round-trip
     back = spark.read.parquet(os.path.join(str(tmp_path), "country_summary.parquet"))
     assert back.count() == summary["country_summary"]
+
+
+def test_save_tables_rejects_unknown_format_before_writing(spark, tmp_path):
+    from sales_etl_pipeline_spark.sources.writers import save_tables
+
+    out = tmp_path / "out"
+    tables = {"a": spark.range(3), "b": spark.range(2)}
+    with pytest.raises(ValueError, match="bogus"):
+        save_tables(tables, str(out), ["csv", "bogus"])
+    assert not out.exists() or not any(out.iterdir())
+
+
+def test_runs_release_their_pins(spark, tmp_path):
+    """run() releases the relations its plans pinned (llmdata._pin) once
+    the outputs are written: back-to-back runs leave the persisted RDDs
+    as they found them."""
+    from sales_etl_pipeline_spark.operators.pipeline import TrainingDataPipeline
+    from sales_etl_pipeline_spark.plans import llmdata
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    llmdata.release_plan_caches()  # pins other tests left behind
+    before = persisted()
+    for i in range(2):
+        AnalyticsPipeline(spark, SF, str(tmp_path / f"sales{i}")).run(["parquet", "sqlite"])
+        assert persisted() == before
+        TrainingDataPipeline(spark, SF, str(tmp_path / f"corpus{i}")).run()
+        assert persisted() == before
+    assert llmdata._PLAN_CACHES == []
 
 
 def test_transform_requires_extract(spark, tmp_path):
@@ -83,18 +146,23 @@ def test_transform_requires_extract(spark, tmp_path):
 
 
 def test_pipeline_stage_logging(spark, tmp_path, caplog):
-    # reference etl.py:52,63 logs per-stage record counts — opt-in here
-    # (each count is a Spark job), stage transitions always logged
+    # reference etl.py:52,63 logs per-stage record counts: stage
+    # transitions are logged as they happen, and load() logs each output
+    # table's record count from the counts its writes observed
     import logging
 
-    pipe = AnalyticsPipeline(spark, SF, str(tmp_path), log_counts=True)
+    pipe = AnalyticsPipeline(spark, SF, str(tmp_path / "out"))
     with caplog.at_level(logging.INFO,
                          logger="sales_etl_pipeline_spark.operators.pipeline"):
         pipe.extract()
         pipe.transform()
+        pipe.load(["parquet"])
     messages = [r.message for r in caplog.records]
     assert any("extract: registered" in m for m in messages)
-    assert any(m.startswith("transform: transactions = ") for m in messages)
+    plain = AnalyticsPipeline(spark, SF, str(tmp_path / "plain"))
+    plain.extract()
+    n = plain.transform()["transactions"].count()
+    assert f"load: transactions = {n} records" in messages
 
 
 def test_excel_adapter_paths(spark, tmp_path):
@@ -679,25 +747,22 @@ def test_variant_surfaces(spark):
 
 
 def test_observed_counts_ride_the_write(spark, tmp_path):
-    """observe_counts: row counts come from Observations attached to the
-    output plans — captured by the load() write jobs themselves, no
-    count() jobs afterwards — and must equal the plain count() numbers."""
+    """Row counts come from Observations attached to the output plans —
+    captured by the load() write jobs themselves, no count() jobs
+    afterwards — and must equal the plain count() numbers. Before load()
+    get_summary() counts instead of blocking on an unfilled Observation."""
     from sales_etl_pipeline_spark.operators.pipeline import AnalyticsPipeline
 
     sf = "/root/testdata/sf0.001"
-    pipe = AnalyticsPipeline(
-        spark, sf, str(tmp_path / "out"), observe_counts=True
-    )
+    pipe = AnalyticsPipeline(spark, sf, str(tmp_path / "out"))
     pipe.extract()
     pipe.transform()
-    assert pipe.observed_counts() == {}  # nothing ran yet — must not block
-    pipe.load(["parquet"])
-    observed = pipe.observed_counts()
     plain = AnalyticsPipeline(spark, sf, str(tmp_path / "out2"))
     plain.extract()
     plain.transform()
     want = {name: df.count() for name, df in plain.transformed_data.items()}
-    assert observed == want
+    assert plain.get_summary() == want  # nothing loaded yet — must not block
+    pipe.load(["parquet"])
     assert pipe.get_summary() == want
 
 
